@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.functions.GraftFunctions._
 import graft.functions.HashFunctions.shingleHashes
+import graft.sources.reftable.HadoopConf
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -1024,7 +1025,7 @@ object Profiling {
       spark: org.apache.spark.sql.SparkSession, root: String,
       version: Option[String] = None): DataFrame = {
     import graft.sources.reftable.{RefTableStats, SnapshotFiles}
-    val conf = new org.apache.hadoop.conf.Configuration()
+    val conf = HadoopConf.copy()
     val dir = SnapshotFiles.resolveDir(root, version, conf)
     val manifest = RefTableStats.load(dir, conf).getOrElse(
       throw new IllegalArgumentException(

@@ -3,6 +3,7 @@ package graft.queries
 import graft.QueryDef
 import graft.functions.GraftFunctions._
 import graft.functions.HashFunctions._
+import graft.sources.reftable.HadoopConf
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators (SURVEY.md §2c Q13 + north-star extensions):
@@ -141,7 +142,7 @@ object DedupOps {
       import org.apache.spark.sql.util.CaseInsensitiveStringMap
       import scala.jdk.CollectionConverters._
       val base = RelationalSupport.scratchDir(s, dir, "q208_adm")
-      val conf = new org.apache.hadoop.conf.Configuration()
+      val conf = HadoopConf.copy()
       val hfs = new org.apache.hadoop.fs.Path(base).getFileSystem(conf)
       hfs.delete(new org.apache.hadoop.fs.Path(base), true)
       val (stagingRoot, corpusRoot, landing) =

@@ -94,8 +94,7 @@ object RelationalSupport {
               var n = footerRowsCache.get((root, e.rel, e.len))
               if (n == null) {
                 val p = new org.apache.hadoop.fs.Path(root, e.rel)
-                val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
-                val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+                val r = graft.sources.reftable.HadoopConf.openParquet(p, conf)
                 n = try java.lang.Long.valueOf(r.getRecordCount) finally r.close()
                 footerRowsCache.put((root, e.rel, e.len), n)
               }

@@ -3,6 +3,7 @@ package graft.queries
 import graft.{QueryDef, Tables}
 import graft.functions.GraftFunctions._
 import graft.functions.HashFunctions._
+import graft.sources.reftable.HadoopConf
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -138,7 +139,7 @@ object TableMutations {
       import graft.sources.reftable.VersionedTable
       val root = RelationalSupport.scratchDir(s, dir, "q110_compact")
       val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(new org.apache.hadoop.conf.Configuration())
+        .getFileSystem(HadoopConf.copy())
       fs.delete(new org.apache.hadoop.fs.Path(root), true)
       VersionedTable.publish(
         Tables.load(s, dir, "supplier")

@@ -3,6 +3,7 @@ package graft.queries
 import graft.{QueryDef, Tables}
 import graft.functions.GraftFunctions._
 import graft.functions.HashFunctions._
+import graft.sources.reftable.HadoopConf
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -350,7 +351,7 @@ object TableRead {
         t(s, dir, "documents").select("doc_id", "lang", "text"),
         root, Seq("lang"), numFiles = 4)
       val resolved = graft.sources.reftable.SnapshotFiles.resolveDir(
-        root, None, new org.apache.hadoop.conf.Configuration())
+        root, None, HadoopConf.copy())
       graft.sources.reftable.RefTableStats.augmentCategorical(s, resolved, Seq("lang"))
       s.read.format("reftable")
         .option("path", root)

@@ -1,6 +1,5 @@
 package graft.sources.reftable
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, lit}
@@ -134,7 +133,7 @@ object Changefeed {
           "Changefeed.between requires 'keyColumns' (the diff join keys)")))
     val opts = RefTableOptions.from(new org.apache.spark.sql.util.CaseInsensitiveStringMap(
       scala.jdk.CollectionConverters.MapHasAsJava(withCf).asJava))
-    val conf = new Configuration()
+    val conf = HadoopConf.copy()
     val fromV = VersionedTable.resolveSpec(opts.path, from, conf)
     val toV =
       if (to.isEmpty)

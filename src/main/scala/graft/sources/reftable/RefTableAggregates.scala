@@ -2,10 +2,7 @@ package graft.sources.reftable
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.expressions.NamedReference
@@ -258,8 +255,7 @@ class RefTableAggFooterReader(
   private var emitted = false
 
   private lazy val row: InternalRow = {
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(partition.path), new Configuration()))
+    val reader = HadoopConf.openParquet(new Path(partition.path), HadoopConf.copy())
     try {
       val footerSchema = reader.getFooter.getFileMetaData.getSchema
       val blocks = reader.getFooter.getBlocks.asScala.toSeq

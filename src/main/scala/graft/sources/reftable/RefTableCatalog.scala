@@ -4,8 +4,6 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.analysis.{NamespaceAlreadyExistsException, NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog._
@@ -42,7 +40,7 @@ class RefTableCatalog extends TableCatalog with SupportsNamespaces with Procedur
     with StagingTableCatalog {
   private var catalogName: String = _
   private var warehouse: String = _
-  private val conf = new Configuration()
+  private val conf = HadoopConf.copy()
 
   override def name(): String = catalogName
 
@@ -90,7 +88,7 @@ class RefTableCatalog extends TableCatalog with SupportsNamespaces with Procedur
     }
     val gen = info.columns.filter(_.generationExpression != null)
     if (gen.nonEmpty) {
-      val om = new ObjectMapper()
+      val om = Json.mapper
       val root = om.createObjectNode()
       gen.foreach(c => root.put(c.name, c.generationExpression))
       props.put(TableCatalog.OPTION_PREFIX + "columnGenerated", om.writeValueAsString(root))
@@ -144,7 +142,7 @@ class RefTableCatalog extends TableCatalog with SupportsNamespaces with Procedur
     if (!fs.exists(dp)) throw new NoSuchTableException(ident)
     val in = fs.open(dp)
     val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val node = new ObjectMapper().readTree(text)
+    val node = Json.mapper.readTree(text)
     val schema = StructType.fromDDL(node.path("schema").asText())
     val opts = Option(node.get("options")).map { o =>
       o.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
@@ -307,7 +305,7 @@ class RefTableCatalog extends TableCatalog with SupportsNamespaces with Procedur
     // time-retention policy binds from the first commit: root marker now
     validated.retainForMs.foreach(
       VersionedTable.declareRetention(tablePath(ident).toString, _, conf))
-    val om = new ObjectMapper()
+    val om = Json.mapper
     val root = om.createObjectNode()
     root.put("schema", RefTableCatalog.plainDdl(schema))
     val on = root.putObject("options")
@@ -500,7 +498,7 @@ class RefTableCatalog extends TableCatalog with SupportsNamespaces with Procedur
         val rp = new Path(tablePath(ident), VersionedTable.RetentionDecl)
         if (fs.exists(rp)) fs.delete(rp, false)
     }
-    val om = new ObjectMapper()
+    val om = Json.mapper
     val root = om.createObjectNode()
     root.put("schema", newSchema.toDDL)
     val on = root.putObject("options")
@@ -589,7 +587,7 @@ class RefTableCatalog extends TableCatalog with SupportsNamespaces with Procedur
       (Map("path" -> tablePath(ident).toString,
         "schema" -> RefTableCatalog.plainDdl(schema))
         ++ stagedOpts).asJava))
-    val om = new ObjectMapper()
+    val om = Json.mapper
     val root = om.createObjectNode()
     root.put("schema", RefTableCatalog.plainDdl(schema))
     val on = root.putObject("options")
@@ -863,7 +861,7 @@ object RefTableCatalog {
     def opt(key: String): Option[com.fasterxml.jackson.databind.JsonNode] =
       options.collectFirst {
         case (k, v) if k.equalsIgnoreCase(key) && v.nonEmpty => v
-      }.map(new ObjectMapper().readTree)
+      }.map(Json.mapper.readTree)
     val defaults = opt("columnDefaults")
     val generated = opt("columnGenerated")
     if (defaults.isEmpty && generated.isEmpty) schema
@@ -904,7 +902,7 @@ object RefTableCatalog {
     * GENERATED ALWAYS AS metadata, or None when no field does.
     */
   private[reftable] def generatedJson(schema: StructType): Option[String] = {
-    val om = new ObjectMapper()
+    val om = Json.mapper
     val root = om.createObjectNode()
     schema.fields.foreach { f =>
       if (f.metadata.contains("GENERATION_EXPRESSION"))
@@ -919,7 +917,7 @@ object RefTableCatalog {
     * character.
     */
   private[reftable] def defaultsJson(schema: StructType): Option[String] = {
-    val om = new ObjectMapper()
+    val om = Json.mapper
     val root = om.createObjectNode()
     schema.fields.foreach { f =>
       val cur = if (f.metadata.contains("CURRENT_DEFAULT"))
@@ -941,7 +939,7 @@ object RefTableCatalog {
     */
   private[reftable] def updateDefaultsJson(
       existing: Option[String], col: String, current: Option[String]): Option[String] = {
-    val om = new ObjectMapper()
+    val om = Json.mapper
     val root = existing match {
       case Some(j) => om.readTree(j).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
       case None => om.createObjectNode()
@@ -965,7 +963,7 @@ object RefTableCatalog {
   /** Drop a column's entry entirely (DROP COLUMN retires its defaults). */
   private[reftable] def removeDefaultsCol(
       existing: Option[String], col: String): Option[String] = existing.flatMap { j =>
-    val om = new ObjectMapper()
+    val om = Json.mapper
     val root = om.readTree(j).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
     root.remove(col)
     if (root.isEmpty) None else Some(om.writeValueAsString(root))
@@ -975,10 +973,10 @@ object RefTableCatalog {
   private[reftable] def renameDefaultsCol(
       existing: Option[String], from: String, to: String): Option[String] =
     existing.map { j =>
-      val om = new ObjectMapper()
+      val om = Json.mapper
       val root = om.readTree(j).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
       Option(root.remove(from)).foreach(n =>
         root.set[com.fasterxml.jackson.databind.JsonNode](to, n))
       om.writeValueAsString(root)
-    }.filter(j => !new ObjectMapper().readTree(j).isEmpty)
+    }.filter(j => !Json.mapper.readTree(j).isEmpty)
 }

@@ -2,7 +2,6 @@ package graft.sources.reftable
 
 import scala.util.control.NonFatal
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
@@ -87,7 +86,7 @@ class RefTableChangefeedStream(
       m
     }
 
-  private val conf = new Configuration()
+  private val conf = HadoopConf.copy()
   private var last: RefTableOffset = _
   private var availableNowGen: Option[Long] = None
   private val pins = scala.collection.mutable.Map.empty[Long, String]
@@ -137,7 +136,7 @@ class RefTableChangefeedStream(
       if (!fs.exists(p)) None
       else {
         val in = fs.open(p)
-        val v = try new com.fasterxml.jackson.databind.ObjectMapper()
+        val v = try Json.mapper
           .readTree(in).path("version").asText()
         finally in.close()
         if (v.isEmpty) None else { pins(gen) = v; Some(v) }

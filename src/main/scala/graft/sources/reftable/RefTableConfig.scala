@@ -57,8 +57,7 @@ object SchemaJson {
     * beyond Jackson, which ships with Spark.
     */
   private def parseRecordJson(s: String): StructType = {
-    import com.fasterxml.jackson.databind.ObjectMapper
-    val root = try new ObjectMapper().readTree(s)
+    val root = try Json.mapper.readTree(s)
     catch { case NonFatal(e) => throw new IllegalArgumentException(s"Invalid schema JSON: ${e.getMessage}") }
     if (root.path("type").asText() != "record")
       throw new IllegalArgumentException("Schema JSON must be a record schema")
@@ -757,7 +756,7 @@ object RefTableOptions {
     Option(options.get("columnDefaults")).filter(_.nonEmpty).foreach { json =>
       try {
         import scala.jdk.CollectionConverters._
-        val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+        val node = Json.mapper.readTree(json)
         for (e <- node.properties().asScala; st <- schema;
              if !st.fieldNames.contains(e.getKey))
           err("columnDefaults", s"columnDefaults names unknown column '${e.getKey}'")
@@ -786,7 +785,7 @@ object RefTableOptions {
       Option(options.get("columnGenerated")).filter(_.nonEmpty).map { json =>
         try {
           import scala.jdk.CollectionConverters._
-          val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+          val node = Json.mapper.readTree(json)
           node.properties().asScala.map { e =>
             val c = e.getKey
             if (schema.exists(st => !st.fieldNames.contains(c)))

@@ -2,7 +2,6 @@ package graft.sources.reftable
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
@@ -105,7 +104,7 @@ object RefTableFileManifest {
       // chain base: a physical version — list it and relativize
       val dir = new Path(root, version).toString
       val qualifiedRoot = fs.makeQualified(new Path(root)).toString
-      return SnapshotFiles.listPhysical(dir, partitionColumns).map { f =>
+      return SnapshotFiles.listPhysical(dir, partitionColumns, conf = conf).map { f =>
         Entry(relOf(f.path, qualifiedRoot), f.length, f.partitionValues)
       }
     }
@@ -117,7 +116,7 @@ object RefTableFileManifest {
         s"reftable: manifest chain at $root/$version exceeds $MaxChainDepth hops — " +
           "the writer should have materialized; refusing a possibly-cyclic walk")
     val in = fs.open(mp)
-    val node = try new ObjectMapper().readTree(in) finally in.close()
+    val node = try Json.mapper.readTree(in) finally in.close()
     val parent = Option(node.get("parent")).filterNot(_.isNull).map(_.asText())
     val removed = Option(node.get("removed")).map(
       _.elements().asScala.map(_.asText()).toSet).getOrElse(Set.empty)
@@ -149,7 +148,7 @@ object RefTableFileManifest {
     val fs = mp.getFileSystem(conf)
     if (!fs.exists(mp)) return 0
     val in = fs.open(mp)
-    val node = try new ObjectMapper().readTree(in) finally in.close()
+    val node = try Json.mapper.readTree(in) finally in.close()
     node.path("depth").asInt(MaxChainDepth) // absent depth: force materialize
   }
 
@@ -166,9 +165,9 @@ object RefTableFileManifest {
     val fs = staging.getFileSystem(conf)
     fs.mkdirs(staging) // the mutation may have staged no rewritten files
     val qualifiedStaging = fs.makeQualified(staging).toString
-    val staged = SnapshotFiles.listPhysical(staging.toString, partitionColumns)
+    val staged = SnapshotFiles.listPhysical(staging.toString, partitionColumns, conf = conf)
       .map(f => (s"./${relOf(f.path, qualifiedStaging)}", f.length, f.partitionValues))
-    val om = new ObjectMapper()
+    val om = Json.mapper
     val rootNode = om.createObjectNode()
     rootNode.put("version", 1)
     val parentDepth = chainDepth(root, parentVersion, conf)
@@ -220,8 +219,8 @@ object RefTableFileManifest {
     val fs = staging.getFileSystem(conf)
     if (fs.exists(new Path(staging, ManifestName))) return
     val qualifiedStaging = fs.makeQualified(staging).toString
-    val staged = SnapshotFiles.listPhysical(staging.toString, partitionColumns)
-    val om = new ObjectMapper()
+    val staged = SnapshotFiles.listPhysical(staging.toString, partitionColumns, conf = conf)
+    val om = Json.mapper
     val rootNode = om.createObjectNode()
     rootNode.put("version", 1)
     rootNode.put("depth", 1)
@@ -260,7 +259,7 @@ object RefTableFileManifest {
         if (!fs.exists(mp)) done = true
         else {
           val in = fs.open(mp)
-          val node = try new ObjectMapper().readTree(in) finally in.close()
+          val node = try Json.mapper.readTree(in) finally in.close()
           // hosting dirs of added entries (inherited ones surface through
           // the parent hops; "./" entries host in cur, already added)
           Option(node.get("added")).foreach(_.elements().asScala.foreach { e =>

@@ -291,7 +291,7 @@ object RefTableMetaTables {
         val bp = new Path(dir, VersionedTable.BucketsMarker)
         val bucketed = if (!fs.exists(bp)) Nil else {
           val in = fs.open(bp)
-          val node = try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
+          val node = try Json.mapper.readTree(in)
             finally in.close()
           import scala.jdk.CollectionConverters._
           Seq(

@@ -1,7 +1,5 @@
 package graft.sources.reftable
 
-import com.fasterxml.jackson.databind.ObjectMapper
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
@@ -51,8 +49,8 @@ object SnapshotFiles {
       case None => VersionedTable.resolveRobust(dir, conf).getOrElse(dir)
     }
 
-  def list(dir: String, partitionColumns: Seq[String], version: Option[String]): Seq[SnapshotFile] = {
-    val conf = new Configuration()
+  def list(dir: String, partitionColumns: Seq[String], version: Option[String],
+      conf: Configuration = HadoopConf.copy()): Seq[SnapshotFile] = {
     val resolved = resolveDir(dir, version, conf)
     // a manifest-referenced version (mutation output) NAMES its files —
     // possibly hosted in other version dirs — instead of containing them.
@@ -73,13 +71,13 @@ object SnapshotFiles {
         }
       // a version dir (manifest-less legacy version): walk unbounded — the
       // dir is immutable, so the cost is per-version, not per-refresh
-      return listPhysical(resolved, partitionColumns)
+      return listPhysical(resolved, partitionColumns, conf = conf)
     }
     // BARE root: every streaming refresh re-walks the whole layout on the
     // driver, so a many-partition bare dir is a standing per-refresh stall
     // — refuse past the limit and name the remedy (adopt migrates the
     // layout into a versioned root whose manifest lists in one read)
-    listPhysical(resolved, partitionColumns, bareDirLimit = Some(bareHiveDirLimit))
+    listPhysical(resolved, partitionColumns, bareDirLimit = Some(bareHiveDirLimit), conf = conf)
   }
 
   /** Max partition directories a BARE (un-adopted) Hive layout may hold
@@ -97,8 +95,7 @@ object SnapshotFiles {
     * roots (see [[list]]): exceeded → refuse with the adopt remedy.
     */
   def listPhysical(resolved: String, partitionColumns: Seq[String],
-      bareDirLimit: Option[Int] = None): Seq[SnapshotFile] = {
-    val conf = new Configuration()
+      bareDirLimit: Option[Int] = None, conf: Configuration = HadoopConf.copy()): Seq[SnapshotFile] = {
     val p = new Path(resolved)
     val fs = p.getFileSystem(conf)
     if (!fs.exists(p)) throw new IllegalArgumentException(s"reftable path does not exist: $resolved")
@@ -175,13 +172,20 @@ object SnapshotFiles {
     */
   def prunedCounted(opts: RefTableOptions,
       filters: Seq[org.apache.spark.sql.sources.Filter]): (Long, Seq[SnapshotFile]) = {
-    val conf = new Configuration()
-    val resolved = resolveDir(opts.path, opts.version, conf)
+    val conf = HadoopConf.copy()
+    prunedCountedIn(resolveDir(opts.path, opts.version, conf), opts, filters, conf)
+  }
+
+  /** [[prunedCounted]] over a snapshot dir the caller already resolved with
+    * `conf`, so one listing and the caller's own reads share a snapshot.
+    */
+  def prunedCountedIn(resolved: String, opts: RefTableOptions,
+      filters: Seq[org.apache.spark.sql.sources.Filter], conf: Configuration): (Long, Seq[SnapshotFile]) = {
     // physicalNesting: hidden partition transforms nest the layout under
     // derived dirs (ts_day=...) that are NOT schema fields — the walk and
     // the manifest pv keys use the dir names, pruning maps source-column
     // predicates onto them (RefTablePartitioning + RefTableTransforms)
-    val listed = list(resolved, opts.physicalNesting, None)
+    val listed = list(resolved, opts.physicalNesting, None, conf)
     val kept = RefTableStats.prune(
       resolved,
       RefTablePartitioning.prune(listed, opts, filters),
@@ -209,7 +213,7 @@ final case class RefTableOffset(batch: Long, gen: Long, upTo: Long = -1L, wall: 
 
 object RefTableOffset {
   def fromJson(s: String): RefTableOffset = {
-    val n = new ObjectMapper().readTree(s)
+    val n = Json.mapper.readTree(s)
     RefTableOffset(
       n.path("batch").asLong(),
       n.path("gen").asLong(),

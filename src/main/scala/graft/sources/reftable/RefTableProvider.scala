@@ -3,6 +3,7 @@ package graft.sources.reftable
 import java.util
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -332,9 +333,8 @@ class RefTableScanBuilder(opts: RefTableOptions)
     if (opts.changefeed) return false // batch reads are refused under changefeed
     // merge-on-read deletion vectors invalidate footer counts (and can
     // hide a deleted extremum): decline, the real scan subtracts them
-    if (DeletionVectors.hasDv(
-        SnapshotFiles.resolveDir(opts.path, opts.version, new org.apache.hadoop.conf.Configuration()),
-        new org.apache.hadoop.conf.Configuration())) return false
+    val conf = HadoopConf.copy()
+    if (DeletionVectors.hasDv(SnapshotFiles.resolveDir(opts.path, opts.version, conf), conf)) return false
     RefTableAggregates.accept(opts, aggregation, sessionTz) match {
       case Some(p) => pushedAgg = Some(p); true
       case None => false
@@ -413,12 +413,17 @@ class RefTableScan(
     * session compression factor, like Spark's own file sources.
     */
   override def estimateStatistics(): Statistics = new Statistics {
-    private val prunedFiles = SnapshotFiles.pruned(opts, (pushed ++ declared).toSeq)
+    // one conf and one resolve: the listing and the stats lookup below read
+    // the same snapshot
+    private val conf = HadoopConf.copy()
+    private val resolved = SnapshotFiles.resolveDir(opts.path, opts.version, conf)
+    private val prunedFiles =
+      SnapshotFiles.prunedCountedIn(resolved, opts, (pushed ++ declared).toSeq, conf)._2
     private val bytes: Long = {
       val factor =
         try org.apache.spark.sql.SparkSession.active.conf
           .get("spark.sql.sources.fileCompressionFactor", "1.0").toDouble
-        catch { case _: Throwable => 1.0 }
+        catch { case NonFatal(_) => 1.0 }
       // post-pruning size: a partition-filtered scan of a huge table is
       // exactly the case where accurate (small) stats enable the broadcast
       math.max(1L, (prunedFiles.map(_.length).sum * factor).toLong)
@@ -429,12 +434,10 @@ class RefTableScan(
     // file-source estimates. Feeds the CBO's join-order/build-side choices.
     private val fileStats: Option[Seq[RefTableStats.FileStats]] =
       try {
-        val conf = new org.apache.hadoop.conf.Configuration()
-        val resolved = SnapshotFiles.resolveDir(opts.path, opts.version, conf)
         val stats = RefTableStats.statsForListing(resolved, prunedFiles, conf)
         val perFile = prunedFiles.map(f => stats.get(f.path))
         if (perFile.forall(_.isDefined)) Some(perFile.flatten) else None
-      } catch { case _: Throwable => None }
+      } catch { case NonFatal(_) => None }
     private val rows: java.util.OptionalLong = fileStats match {
       case Some(fss) => java.util.OptionalLong.of(math.max(0L,
         fss.map(_.rows).sum - prunedFiles.map(_.dvPositions.size.toLong).sum))

@@ -1,14 +1,11 @@
 package graft.sources.reftable
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.FilterApi
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.LogicalTypeAnnotation.{TimestampLogicalTypeAnnotation, TimeUnit}
 import org.apache.parquet.schema.{MessageType, Type}
@@ -220,7 +217,7 @@ class RefTablePartitionReader(
   // pushed LIMIT: rows still wanted from this partition
   private var remaining: Int = limit.getOrElse(Int.MaxValue)
 
-  private val conf = new Configuration()
+  private val conf = HadoopConf.copy()
 
   private val fileMeta =
     RefTableColumnarReader.fileMetaOf(new Path(partition.path), partition.fileLength, conf)
@@ -289,7 +286,7 @@ class RefTablePartitionReader(
 
   private val reader: ParquetReader[Group] = {
     conf.set(ReadSupport.PARQUET_READ_SCHEMA, requestedSchema.toString)
-    val b = ParquetReader.builder(new GroupReadSupport(), new Path(partition.path)).withConf(conf)
+    val b = HadoopConf.groupReader(new Path(partition.path), conf)
       .withFileRange(partition.start, partition.start + partition.length)
     // deletion vectors: parquet-mr row-group skipping and record filtering
     // would desynchronize the sequential row index the positions address,

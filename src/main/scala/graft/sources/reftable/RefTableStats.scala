@@ -5,11 +5,9 @@ import java.util.concurrent.{Callable, ConcurrentHashMap, Executors}
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
@@ -121,7 +119,7 @@ object RefTableStats {
     * hundreds-of-MB JSON document — through the driver.
     */
   def writeManifest(
-      dir: String, conf: Configuration = new Configuration(),
+      dir: String, conf: Configuration = HadoopConf.copy(),
       shardThreshold: Int = ShardThreshold): Unit = {
     val base = new Path(dir)
     val fs = base.getFileSystem(conf)
@@ -152,7 +150,7 @@ object RefTableStats {
       }.map(_.get())
     } finally pool.shutdown()
 
-    val mapper = new ObjectMapper()
+    val mapper = Json.mapper
     val root = mapper.createObjectNode()
     root.put("version", 1)
     val filesNode = root.putObject("files")
@@ -160,16 +158,14 @@ object RefTableStats {
       val f = filesNode.putObject(rel)
       f.put("len", len)
       f.put("rows", rows)
-      f.set("cols", colsNode(mapper, cols))
+      f.set("cols", colsNode(cols))
       ()
     }
     LocalFs.createWrite(fs, new Path(base, ManifestName), mapper.writeValueAsBytes(root))
   }
 
-  private def colsNode(
-      mapper: ObjectMapper,
-      cols: Map[String, (Any, Any, Long)]): com.fasterxml.jackson.databind.node.ObjectNode = {
-    val cn = mapper.createObjectNode()
+  private def colsNode(cols: Map[String, (Any, Any, Long)]): com.fasterxml.jackson.databind.node.ObjectNode = {
+    val cn = Json.mapper.createObjectNode()
     cols.foreach { case (c, (mn, mx, nulls)) =>
       val o = cn.putObject(c)
       putScalar(o, "min", mn)
@@ -205,10 +201,9 @@ object RefTableStats {
       .repartition(tasks)
       .mapPartitions { it =>
         val c = confB.value.value
-        val mapper = new ObjectMapper()
         it.map { case (rel, len) =>
           val (nRows, cols) = fileColumnStats(new Path(qualified, rel), c)
-          (rel, len, nRows, mapper.writeValueAsString(colsNode(mapper, cols)))
+          (rel, len, nRows, Json.mapper.writeValueAsString(colsNode(cols)))
         }
       }
       .toDF("path", "len", "rows", "cols")
@@ -322,7 +317,7 @@ object RefTableStats {
     * column). `nulls` is -1 when any row group leaves the null count unset.
     */
   private def fileColumnStats(path: Path, conf: Configuration): (Long, Map[String, (Any, Any, Long)]) = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
+    val reader = HadoopConf.openParquet(path, conf)
     try {
       val md = reader.getFooter
       val blocks = md.getBlocks.asScala.toSeq
@@ -415,7 +410,7 @@ object RefTableStats {
     */
   def augmentCategorical(
       spark: org.apache.spark.sql.SparkSession, dir: String, cols: Seq[String],
-      maxDistinct: Int = 64, conf: Configuration = new Configuration()): Unit = {
+      maxDistinct: Int = 64, conf: Configuration = HadoopConf.copy()): Unit = {
     import org.apache.spark.sql.functions._
     require(cols.nonEmpty, "augmentCategorical needs at least one column")
     val base = new Path(dir)
@@ -508,7 +503,7 @@ object RefTableStats {
       updates: Map[(String, String), ColPatch]): Unit = {
     val mf = new Path(base, ManifestName)
     val in = fs.open(mf)
-    val root = try new ObjectMapper().readTree(in)
+    val root = try Json.mapper.readTree(in)
       .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
     finally in.close()
     val filesNode = root.path("files").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
@@ -524,7 +519,7 @@ object RefTableStats {
     // rename, or whole-object PUT): a version dir is published (readers
     // may hold it), so the manifest must never be observable half-written
     CommitPrimitive.forPath(mf, fs.getConf)
-      .overwrite(mf, new ObjectMapper().writeValueAsBytes(root), fs.getConf)
+      .overwrite(mf, Json.mapper.writeValueAsBytes(root), fs.getConf)
   }
 
   private def spliceSharded(
@@ -540,7 +535,7 @@ object RefTableStats {
     val merged = spark.read.parquet(shardFiles(sd, fs): _*)
       .select("path", "len", "rows", "cols").as[(String, Long, Long, String)]
       .mapPartitions { it =>
-        val mapper = new ObjectMapper()
+        val mapper = Json.mapper
         val ups = byFileB.value
         it.map { case (rel, len, rows, colsJson) =>
           ups.get(rel) match {
@@ -588,7 +583,7 @@ object RefTableStats {
   def augmentBloom(
       spark: org.apache.spark.sql.SparkSession, dir: String, cols: Seq[String],
       expectedItems: Long = 100000L, fpp: Double = 0.03,
-      conf: Configuration = new Configuration()): Unit = {
+      conf: Configuration = HadoopConf.copy()): Unit = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     require(cols.nonEmpty, "augmentBloom needs at least one column")
@@ -663,7 +658,7 @@ object RefTableStats {
     */
   def augmentNdv(
       spark: org.apache.spark.sql.SparkSession, dir: String, cols: Seq[String],
-      conf: Configuration = new Configuration()): Unit = {
+      conf: Configuration = HadoopConf.copy()): Unit = {
     import org.apache.spark.sql.functions._
     require(cols.nonEmpty, "augmentNdv needs at least one column")
     val base = new Path(dir)
@@ -843,7 +838,7 @@ object RefTableStats {
       if (manifestCache.size > 1024) manifestCache.clear()
       Some(manifestCache.computeIfAbsent(key, { _ =>
         val in = fs.open(p)
-        val root = try new ObjectMapper().readTree(in) finally in.close()
+        val root = try Json.mapper.readTree(in) finally in.close()
         root.path("files").properties().asScala.map { e =>
           val fn = e.getValue
           e.getKey -> FileStats(fn.path("len").asLong(), fn.path("rows").asLong(),
@@ -887,7 +882,7 @@ object RefTableStats {
           .select("path", "len", "rows", "cols").as[(String, Long, Long, String)]
           .collect()
           .map { case (rel, len, rows, colsJson) =>
-            rel -> FileStats(len, rows, parseCols(new ObjectMapper().readTree(colsJson)))
+            rel -> FileStats(len, rows, parseCols(Json.mapper.readTree(colsJson)))
           }.toMap
       }))
     } catch {
@@ -1028,7 +1023,7 @@ object RefTableStats {
     val fts = filters // stable local for closure cleanliness
     val o = opts
     val kept = joined.mapPartitions { it =>
-      val mapper = new ObjectMapper()
+      val mapper = Json.mapper
       it.flatMap { case (rel, flen, pv, rowsOpt, colsOpt) =>
         (rowsOpt, colsOpt) match {
           case (Some(nRows), Some(colsJson)) =>

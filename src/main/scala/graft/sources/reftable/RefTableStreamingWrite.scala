@@ -126,7 +126,7 @@ class RefTableStreamingWrite(
   }
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val conf = new Configuration()
+    val conf = HadoopConf.copy()
     val epochMsgs = messages.toSeq.collect { case m: StagedEpochFiles => m }
     val staged = epochMsgs.flatMap(_.files)
     // expectation drop census (onViolation=drop): aggregate across tasks
@@ -289,7 +289,7 @@ class RefTableStreamingWrite(
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val conf = new Configuration()
+    val conf = HadoopConf.copy()
     val epochDir = new Path(s"$stagingRoot/$epochId")
     epochDir.getFileSystem(conf).delete(epochDir, true)
     ()
@@ -367,7 +367,7 @@ final class EpochWriter(
   private var qRows = 0L
 
   private val conf = {
-    val c = new Configuration()
+    val c = HadoopConf.copy()
     // ParquetWriteSupport.init / SparkToParquetSchemaConverter read these
     // from the hadoop conf with no defaults (Spark's own writer sets them
     // in prepareWrite) — TIMESTAMP_MICROS + CORRECTED to match every

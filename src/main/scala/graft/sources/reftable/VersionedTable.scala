@@ -66,7 +66,7 @@ object VersionedTable {
     * per-epoch writers call this on every commit, and an unchanged policy
     * must not cost a write. */
   def declareRetention(root: String, ms: Long,
-      conf: Configuration = new Configuration()): Unit = {
+      conf: Configuration = HadoopConf.copy()): Unit = {
     val p = new Path(new Path(root), RetentionDecl)
     if (!declaredRetentionMs(root, conf).contains(ms))
       try CommitPrimitive.forPath(p, conf).overwrite(p, ms.toString.getBytes("UTF-8"), conf)
@@ -224,7 +224,7 @@ object VersionedTable {
     * atomically with their full content, so there is no partial-read
     * window on this path.
     */
-  def resolve(root: String, conf: Configuration = new Configuration()): Option[String] =
+  def resolve(root: String, conf: Configuration = HadoopConf.copy()): Option[String] =
     lastCommit(root, conf).map(c => new Path(root, c.version).toString)
 
   /** Latest commit of the table: max sequence in the commit log, or a
@@ -232,7 +232,7 @@ object VersionedTable {
     * written before the log — and [[adopt]]-migrated bare dirs — read and
     * CAS correctly; their first logged commit claims sequence 1).
     */
-  def lastCommit(root: String, conf: Configuration = new Configuration()): Option[Commit] = {
+  def lastCommit(root: String, conf: Configuration = HadoopConf.copy()): Option[Commit] = {
     commitFiles(root, conf).lastOption match {
       case Some((seq, path)) => Some(readCommit(seq, path, conf))
       case None => pointerLines(root, conf).flatMap { lines =>
@@ -245,7 +245,7 @@ object VersionedTable {
   /** Retained commit records, ascending sequence. Empty for legacy roots
     * (their state is the synthetic seq-0 of [[lastCommit]]).
     */
-  def commitLog(root: String, conf: Configuration = new Configuration()): Seq[Commit] =
+  def commitLog(root: String, conf: Configuration = HadoopConf.copy()): Seq[Commit] =
     commitFiles(root, conf).map { case (seq, p) => readCommit(seq, p, conf) }
 
   private def commitsDirExists(root: String, conf: Configuration): Boolean = {
@@ -328,7 +328,7 @@ object VersionedTable {
     * HDFS/object-store renames don't have the window; the retry simply
     * never fires there.
     */
-  def resolveRobust(root: String, conf: Configuration = new Configuration()): Option[String] = {
+  def resolveRobust(root: String, conf: Configuration = HadoopConf.copy()): Option[String] = {
     var attempts = 0
     while (true) {
       resolve(root, conf) match {
@@ -355,7 +355,7 @@ object VersionedTable {
     * line 2), if any — used by [[completeModePublisher]] for replay
     * idempotency.
     */
-  def publishedMarker(root: String, conf: Configuration = new Configuration()): Option[String] =
+  def publishedMarker(root: String, conf: Configuration = HadoopConf.copy()): Option[String] =
     lastCommit(root, conf).flatMap(_.marker)
 
   /** Pointer file content as lines: line 1 = version name, optional
@@ -481,12 +481,12 @@ object VersionedTable {
       marker = Some(s"layout=bucket:${bucketCols.mkString(",")}:$nBuckets")) { staging =>
       writeParquetMicros(
         df.repartition(nBuckets, bucketCols.map(df.col): _*), staging.toString)
-      val om = new com.fasterxml.jackson.databind.ObjectMapper()
+      val om = Json.mapper
       val node = om.createObjectNode()
       val cols = node.putArray("cols")
       bucketCols.foreach(cols.add)
       node.put("n", nBuckets)
-      LocalFs.createWrite(staging.getFileSystem(new Configuration()),
+      LocalFs.createWrite(staging.getFileSystem(HadoopConf.copy()),
         new Path(staging, BucketsMarker), om.writeValueAsBytes(node))
     }
   }
@@ -529,7 +529,7 @@ object VersionedTable {
     */
   def cloneTo(srcRoot: String, dstRoot: String, version: Option[String] = None,
       partitionColumns: Seq[String] = Nil, keepVersions: Int = 3): String = {
-    val conf = new Configuration()
+    val conf = HadoopConf.copy()
     // merge-on-read sources clone too: the listing arrives with its pinned
     // DV positions attached, and a remapped sidecar re-keys them onto the
     // clone's fresh (c%05d-prefixed) file names — see writeRemapped
@@ -614,7 +614,7 @@ object VersionedTable {
   def promote(
       stagingRoot: String, targetRoot: String, expectedBase: Option[String] = None,
       partitionColumns: Seq[String] = Nil, keepVersions: Int = 3): String = {
-    val conf = new Configuration()
+    val conf = HadoopConf.copy()
     // a MoR'd staging table promotes too: its pinned DV positions re-key
     // onto the promoted version's fresh file names (see cloneTo)
     val files = SnapshotFiles.list(stagingRoot, partitionColumns, None)
@@ -656,7 +656,7 @@ object VersionedTable {
     * (orphan) directories.
     */
   def parentOf(root: String, version: String,
-      conf: Configuration = new Configuration()): Option[String] =
+      conf: Configuration = HadoopConf.copy()): Option[String] =
     commitLog(root, conf).find(_.version == version).flatMap(_.parent)
 
   /** Optimistic-concurrency wrapper for read-modify-write publishes
@@ -762,7 +762,7 @@ object VersionedTable {
     require(keepVersions >= 2,
       "keepVersions must be >= 2: retaining only the current version would delete " +
         "the previous one under readers still pinned to it")
-    val conf = new Configuration()
+    val conf = HadoopConf.copy()
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(conf)
     if (resolve(root, conf).isEmpty && fs.exists(rootPath) && bareEntries(rootPath, fs).nonEmpty)
@@ -1079,7 +1079,7 @@ object VersionedTable {
     */
   def restore(root: String, toVersionOrTag: String, keepVersions: Int = 3,
       partitionColumns: Seq[String] = Nil): String = withConflictRetry(root) { () =>
-    val conf = new Configuration()
+    val conf = HadoopConf.copy()
     // `tag:<name>` restores the tagged version (tags protect their target
     // from retention, so this is always a retained state); `ts:<timestamp>`
     // restores TIMESTAMP AS OF
@@ -1132,7 +1132,7 @@ object VersionedTable {
     require(name.matches(TagNameRe),
       s"tag: invalid tag name '$name' (allowed: letters, digits, '.', '_', '-'; " +
         "must start alphanumeric; max 128 chars)")
-    val conf = new Configuration()
+    val conf = HadoopConf.copy()
     val target = version.getOrElse(
       resolve(root, conf).map(p => new Path(p).getName).getOrElse(
         throw new IllegalArgumentException(s"$root is not a versioned table root")))
@@ -1170,7 +1170,7 @@ object VersionedTable {
     * it protected. Returns whether the tag existed.
     */
   def dropTag(root: String, name: String): Boolean = {
-    val conf = new Configuration()
+    val conf = HadoopConf.copy()
     val rootPath = new Path(root)
     val p = tagPath(rootPath, name)
     val fs = rootPath.getFileSystem(conf)
@@ -1180,7 +1180,7 @@ object VersionedTable {
 
   /** All tags as (name, version, createdMs), name-ordered. */
   def tags(root: String,
-      conf: Configuration = new Configuration()): Seq[(String, String, Long)] = {
+      conf: Configuration = HadoopConf.copy()): Seq[(String, String, Long)] = {
     val dir = new Path(new Path(root), TagsDir)
     val fs = dir.getFileSystem(conf)
     val entries =
@@ -1189,7 +1189,7 @@ object VersionedTable {
     entries.flatMap { s =>
       val in = fs.open(s.getPath)
       val node =
-        try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
+        try Json.mapper.readTree(in)
         finally in.close()
       val v = node.path("version").asText()
       if (v.isEmpty) None
@@ -1199,13 +1199,13 @@ object VersionedTable {
 
   /** The version a tag names, if the tag exists. */
   def resolveTag(root: String, name: String,
-      conf: Configuration = new Configuration()): Option[String] = {
+      conf: Configuration = HadoopConf.copy()): Option[String] = {
     val p = tagPath(new Path(root), name)
     val fs = p.getFileSystem(conf)
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
-      val v = try new com.fasterxml.jackson.databind.ObjectMapper()
+      val v = try Json.mapper
         .readTree(in).path("version").asText()
       finally in.close()
       Some(v).filter(_.nonEmpty)
@@ -1249,7 +1249,7 @@ object VersionedTable {
     require(name.matches(TagNameRe),
       s"branch: invalid branch name '$name' (allowed: letters, digits, '.', '_', " +
         "'-'; must start alphanumeric; max 128 chars)")
-    val conf = new Configuration()
+    val conf = HadoopConf.copy()
     val fork = version match {
       case Some(v) =>
         new Path(SnapshotFiles.resolveDir(root, Some(v), conf)).getName
@@ -1281,7 +1281,7 @@ object VersionedTable {
 
   /** The fork version a branch's next fast-forward CASes against. */
   def branchFork(root: String, name: String,
-      conf: Configuration = new Configuration()): Option[String] =
+      conf: Configuration = HadoopConf.copy()): Option[String] =
     readFork(root, name, "version", conf)
 
   /** The BRANCH version whose content matched main at the recorded fork —
@@ -1290,7 +1290,7 @@ object VersionedTable {
     * older branches (rebase then falls back to the clone commit).
     */
   def branchBase(root: String, name: String,
-      conf: Configuration = new Configuration()): Option[String] =
+      conf: Configuration = HadoopConf.copy()): Option[String] =
     readFork(root, name, "base", conf)
 
   private def readFork(root: String, name: String, field: String,
@@ -1300,7 +1300,7 @@ object VersionedTable {
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
-      val v = try new com.fasterxml.jackson.databind.ObjectMapper()
+      val v = try Json.mapper
         .readTree(in).path(field).asText()
       finally in.close()
       Some(v).filter(_.nonEmpty)
@@ -1322,7 +1322,7 @@ object VersionedTable {
   }
 
   /** All branches: (name, fork version, branch head version if published). */
-  def branches(root: String, conf: Configuration = new Configuration())
+  def branches(root: String, conf: Configuration = HadoopConf.copy())
       : Seq[(String, String, Option[String])] = {
     val dir = new Path(new Path(root), BranchesDir)
     val fs = dir.getFileSystem(conf)
@@ -1346,7 +1346,7 @@ object VersionedTable {
     */
   def fastForward(root: String, name: String,
       partitionColumns: Seq[String] = Nil, keepVersions: Int = 3): String = {
-    val conf = new Configuration()
+    val conf = HadoopConf.copy()
     val bRoot = branchRoot(root, name)
     var attempts = 0
     while (attempts < 3) {
@@ -1431,7 +1431,7 @@ object VersionedTable {
     */
   def rebaseBranch(root: String, name: String,
       partitionColumns: Seq[String] = Nil, keepVersions: Int = 3): String = {
-    val conf = new Configuration()
+    val conf = HadoopConf.copy()
     val bRoot = branchRoot(root, name)
     branchFork(root, name, conf).getOrElse(
       throw new IllegalArgumentException(
@@ -1526,7 +1526,7 @@ object VersionedTable {
     * untouched — branch versions were never in main's commit log.
     */
   def dropBranch(root: String, name: String): Boolean = {
-    val conf = new Configuration()
+    val conf = HadoopConf.copy()
     val p = new Path(branchRoot(root, name))
     val fs = p.getFileSystem(conf)
     fs.exists(p) && fs.delete(p, true)
@@ -1566,7 +1566,7 @@ object VersionedTable {
     * retention.
     */
   def resolveAsOf(root: String, tsMillis: Long,
-      conf: Configuration = new Configuration()): Option[String] = {
+      conf: Configuration = HadoopConf.copy()): Option[String] = {
     val log = commitLog(root, conf) // ascending seq
     if (log.isEmpty) // legacy pointer-only root: name order is all there is
       committedVersionDirs(root, conf).takeWhile(versionTimestampMs(_) <= tsMillis).lastOption
@@ -1581,7 +1581,7 @@ object VersionedTable {
     * hand a pinned reader the wrong snapshot.
     */
   def resolveSpec(root: String, spec: String,
-      conf: Configuration = new Configuration()): String =
+      conf: Configuration = HadoopConf.copy()): String =
     if (spec.startsWith("tag:")) {
       val t = spec.stripPrefix("tag:")
       resolveTag(root, t, conf).getOrElse(
@@ -1613,7 +1613,7 @@ object VersionedTable {
       spark: org.apache.spark.sql.SparkSession, root: String,
       targetFileBytes: Long = 128L * 1024 * 1024, keepVersions: Int = 3,
       partitionColumns: Seq[String] = Nil): String = withConflictRetry(root) { () =>
-    val conf = new Configuration()
+    val conf = HadoopConf.copy()
     val current = resolve(root, conf).getOrElse(
       throw new IllegalArgumentException(s"$root is not a versioned table root"))
     val bytes = SnapshotFiles.list(current, partitionColumns).map(_.length).sum
@@ -1667,7 +1667,7 @@ object VersionedTable {
     */
   def history(spark: org.apache.spark.sql.SparkSession, root: String): DataFrame = {
     import spark.implicits._
-    val conf = new Configuration()
+    val conf = HadoopConf.copy()
     val current = resolve(root, conf).map(p => new Path(p).getName)
     committedVersionDirs(root, conf).zipWithIndex.map { case (name, i) =>
       val dir = new Path(root, name).toString
@@ -1705,7 +1705,7 @@ object VersionedTable {
     require(minKeep >= 2,
       "minKeep must be >= 2: retaining only the current version would delete " +
         "the previous one under readers still pinned to it")
-    val conf = new Configuration()
+    val conf = HadoopConf.copy()
     val committed = committedVersionDirs(root, conf)
     val youngEnough = committed.count(v => versionTimestampMs(v) >= olderThanMs)
     vacuum(root, math.max(minKeep, youngEnough))
@@ -1715,7 +1715,7 @@ object VersionedTable {
     require(keepVersions >= 2,
       "keepVersions must be >= 2: retaining only the current version would delete " +
         "the previous one under readers still pinned to it")
-    val conf = new Configuration()
+    val conf = HadoopConf.copy()
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(conf)
     val all = commitFiles(root, conf)
@@ -1860,7 +1860,7 @@ object VersionedTable {
   def changes(
       spark: org.apache.spark.sql.SparkSession, root: String,
       keyCols: Seq[String], fromVersion: String): org.apache.spark.sql.DataFrame = {
-    val (b, a) = diffSides(spark, root, fromVersion, new Configuration())
+    val (b, a) = diffSides(spark, root, fromVersion, HadoopConf.copy())
     graft.operators.SnapshotDiff.diff(b, a, keyCols)
   }
 
@@ -1873,7 +1873,7 @@ object VersionedTable {
   def changesImages(
       spark: org.apache.spark.sql.SparkSession, root: String,
       keyCols: Seq[String], fromVersion: String): org.apache.spark.sql.DataFrame = {
-    val (b, a) = diffSides(spark, root, fromVersion, new Configuration())
+    val (b, a) = diffSides(spark, root, fromVersion, HadoopConf.copy())
     graft.operators.SnapshotDiff.diffImages(b, a, keyCols)
   }
 
@@ -1918,7 +1918,7 @@ object VersionedTable {
     * effect of publishing). Returns the created version name.
     */
   def adopt(root: String, partitionColumns: Seq[String] = Nil): String = {
-    val conf = new Configuration()
+    val conf = HadoopConf.copy()
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(conf)
     require(resolve(root, conf).isEmpty, s"$root is already a versioned table root")
@@ -1961,7 +1961,7 @@ object VersionedTable {
     * must not shadow a later in-log re-declaration.
     */
   def layoutDeclaration(
-      root: String, conf: Configuration = new Configuration()): Option[(Long, String)] = {
+      root: String, conf: Configuration = HadoopConf.copy()): Option[(Long, String)] = {
     val p = new Path(root, LayoutDecl)
     val fs = p.getFileSystem(conf)
     val fromFile =
@@ -1995,7 +1995,7 @@ object VersionedTable {
     */
   private[reftable] def readVersion(
       spark: org.apache.spark.sql.SparkSession, versionDir: String): DataFrame = {
-    val conf = new Configuration()
+    val conf = HadoopConf.copy()
     val p = new Path(versionDir)
     val manifested = p.getName.matches("v\\d{19}_[0-9a-f]{8}") && p.getParent != null &&
       RefTableFileManifest.exists(p.getParent.toString, p.getName, conf)
@@ -2028,7 +2028,7 @@ object VersionedTable {
     * to intersect with, so all version dirs stand, as before.
     */
   def committedVersionDirs(
-      root: String, conf: Configuration = new Configuration()): Seq[String] = {
+      root: String, conf: Configuration = HadoopConf.copy()): Seq[String] = {
     val log = commitLog(root, conf)
     val dirs = versionDirs(root, conf)
     if (log.isEmpty) dirs
@@ -2036,7 +2036,7 @@ object VersionedTable {
   }
 
   /** Version directory names under `root`, oldest first. */
-  def versionDirs(root: String, conf: Configuration = new Configuration()): Seq[String] = {
+  def versionDirs(root: String, conf: Configuration = HadoopConf.copy()): Seq[String] = {
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(conf)
     if (!fs.exists(rootPath)) Seq.empty

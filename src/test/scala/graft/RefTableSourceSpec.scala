@@ -1137,8 +1137,12 @@ class RefTableSourceSpec extends AnyFunSuite {
     val fs = new HPath(dir).getFileSystem(spark.sessionState.newHadoopConf())
     val staged = fs.listStatus(new HPath(staging))
       .filter(_.getPath.getName.endsWith(".parquet")).head.getPath
-    assert(waitFor(perGen.synchronized(perGen.values.exists(_ == expected(1)))),
-      "v1 generation never observed")
+    // the query's FIRST generation lands wherever in the interval the query
+    // happened to start, possibly just before a boundary whose listing would
+    // then pin the file the swap deletes; a later generation's batch lands
+    // right after its boundary, so swap only once a second one has landed
+    assert(waitFor(perGen.synchronized(perGen.values.count(_ == expected(1)) >= 2)),
+      "v1 generation never observed twice")
     fs.listStatus(new HPath(dir)).filter(_.getPath.getName.endsWith(".parquet"))
       .foreach(s => fs.delete(s.getPath, false))
     fs.rename(staged, new HPath(dir, "data_v2.parquet"))
